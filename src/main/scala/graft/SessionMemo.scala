@@ -53,6 +53,9 @@ final class SessionMemo[K, V](name: String = "") {
     b.result()
   }
 
+  /** Drop the entries whose key matches `p` (superseded generations). */
+  private[graft] def removeIf(p: K => Boolean): Unit = m.keySet().removeIf(k => p(k))
+
   private[graft] def clear(): Unit = m.clear()
 }
 

@@ -215,6 +215,15 @@ object Similarity {
     .select(col(idCol) +: payload.map(col) :+
       xxhash64(col("pos"), col("col")).as("bkey"): _*)
 
+  /** The band keys of one [[minhashSignature]] as an ARRAY<BIGINT>:
+    * element b is the `bkey` [[bandKeys]] emits for band b (the same
+    * `xxhash64(band index, signature slice)`), computed row-locally for
+    * probes that look keys up instead of exploding and joining them (the
+    * landed streaming ingest doors). */
+  def bandKeyArray(sig: Column): Column =
+    array((0 until Bands).map(b =>
+      xxhash64(lit(b), slice(sig, b * RowsPerBand + 1, RowsPerBand))): _*)
+
   /** Public band-key entry for cross-module consumers (the streaming
     * near-dup ingest gate): the SAME definition as the q41 pipeline —
     * one source of truth for the banding, so batch and stream cannot

@@ -8,7 +8,7 @@ package graft.multimodal
   * a declared stub ([[Multimodal]] scaladoc); this closes the metadata
   * tier the same way [[Mp3]] did for MP3.
   *
-  * Total: no "OggS" magic, no `vorbis` id packet, or no parsable
+  * Total: no "OggS" magic, no `\u0001vorbis` id packet, or no parsable
   * final granule → None (quarantine contract). CRCs are not verified —
   * metadata routing tolerates what a strict decoder would reject, and
   * the q88 fixture exercises exactly the documented fields.

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -816,25 +817,30 @@ object Streaming {
   // ------------------- landed corpus-side catalog for the ingest doors
 
   /** Names of the LANDED corpus-side tables the streaming ingest doors
-    * probe: canonical URLs, content digests, hashed word-shingle sets,
-    * LSH band postings, trigram-gram arrays, and the exploded gram
-    * postings. One handle, so a door cannot mix tables from two corpus
-    * generations. */
+    * read: canonical URLs, content digests, hashed word-shingle sets, LSH
+    * band postings and trigram-gram arrays. One handle, so a door cannot
+    * mix tables from two corpus generations. */
   final case class IngestCatalog(canonT: String, digestT: String,
-      sigsT: String, bandsT: String, gramT: String, gpostT: String)
+      sigsT: String, bandsT: String, gramT: String) {
+    def tables: Seq[String] = Seq(canonT, digestT, sigsT, bandsT, gramT)
+  }
 
   /** Land (once per corpus refresh) the corpus-side tables the streaming
-    * ingest doors probe, and return their handle. Each table goes through
+    * ingest doors read, and return their handle. Each table goes through
     * [[graft.io.Layout.ensureBucketed]]'s fingerprint lock (source file
     * metadata — the q87 mtime idiom), so the recurring call at every
     * stream (re)start costs a few `getFileStatus` calls when the corpus
     * is unchanged and rebuilds ONLY when it actually changed: at 100 TB a
-    * stream restart must never re-hash the corpus (r12 judge task 2).
-    * Derived tables chain their staleness through their parents' files
-    * (bands reads the landed sigs table, gram postings read the landed
-    * gram table — a corpus change re-fingerprints the whole chain).
-    * `name` is the corpus's stable identity (a canonical dir path, a
-    * dataset name); two corpora must not share one. */
+    * stream restart must never re-hash the corpus. Derived tables chain
+    * their staleness through their parents' files (bands reads the landed
+    * sigs table — a corpus change re-fingerprints the whole chain).
+    *
+    * The landed doors do not scan these tables per micro-batch: they read
+    * them once per catalog generation into a broadcast [[CorpusIndex]]
+    * (see [[corpusIndex]]), which also inverts the gram arrays into gram
+    * postings — so no exploded postings table is landed. `name` is the
+    * corpus's stable identity (a canonical dir path, a dataset name); two
+    * corpora must not share one. */
   def ensureIngestCatalog(spark: SparkSession, name: String,
       corpus: DataFrame): IngestCatalog = {
     import graft.llm.Similarity
@@ -843,7 +849,7 @@ object Streaming {
     val cat = IngestCatalog(
       s"graft_ingate_canon_$suffix", s"graft_ingate_digest_$suffix",
       s"graft_ingate_sigs_$suffix", s"graft_ingate_bands_$suffix",
-      s"graft_ingate_gram_$suffix", s"graft_ingate_gpost_$suffix")
+      s"graft_ingate_gram_$suffix")
     graft.io.Layout.ensureBucketed(spark, cat.canonT, "canon", 16)(
       corpus.select(canonUdf(col("url")).as("canon"))
         .filter(col("canon").isNotNull).distinct())
@@ -862,10 +868,26 @@ object Streaming {
           Similarity.gram3Hashed(Similarity.tokens(col("text"))).as("g_c"))
         .select(col("cor_id"), col("g_c"), size(col("g_c")).cast("long").as("sz_c"))
         .filter(col("sz_c") > 0))
-    graft.io.Layout.ensureBucketed(spark, cat.gpostT, "h", 16)(
-      spark.table(cat.gramT)
-        .select(col("cor_id"), explode(col("g_c")).as("h")))
     cat
+  }
+
+  /** One broadcast [[CorpusIndex]] per catalog GENERATION, keyed on the
+    * catalog's tables and the `graft.fingerprint` each was landed under:
+    * a stream restart over an unchanged catalog reuses the broadcast and
+    * reads nothing, a re-land (new fingerprints) builds the next
+    * generation and drops the superseded one from the memo (a query still
+    * running on it keeps its own reference). */
+  private val indexMemo = new graft.SessionMemo[
+    (SparkSession, IngestCatalog, Seq[String]), Broadcast[CorpusIndex]]("ingest_index")
+
+  private[streaming] def corpusIndex(spark: SparkSession,
+      cat: IngestCatalog): Broadcast[CorpusIndex] = {
+    val fps = cat.tables.map(t => graft.io.Layout.landedFingerprint(spark, t)
+      .getOrElse(throw new IllegalStateException(
+        s"$t is not landed: call ensureIngestCatalog first")))
+    indexMemo.removeIf { case (s, c, f) => s == spark && c == cat && f != fps }
+    indexMemo.getOrCompute((spark, cat, fps))(_ =>
+      spark.sparkContext.broadcast(CorpusIndex.build(spark, cat)))
   }
 
   // ------------------------------------ streaming near-dup ingest gate
@@ -915,16 +937,28 @@ object Streaming {
   }
 
   /** [[nearDupIngestStream]] over the LANDED catalog ([[ensureIngestCatalog]]):
-    * the corpus-side shingle sets and band postings are bucketed catalog
-    * tables, so a stream (re)start — and every MICRO-BATCH, since
-    * stream-static sides re-execute per trigger — reads parquet instead
-    * of re-hashing the corpus (r12 judge task 2: at 100 TB a restart
-    * must not re-mint corpus signatures). Verdicts are identical by
-    * construction: the tables hold exactly the frames the inline door
-    * derives. */
+    * the shingle sets and band postings are read once per catalog
+    * generation into the broadcast [[CorpusIndex]], and each doc probes
+    * it row-locally — a micro-batch scans no table and broadcasts
+    * nothing. The band keys are [[graft.llm.Similarity.bandKeyArray]]
+    * (the q41 banding, unexploded) and the verify is the inline door's,
+    * so verdicts, best matches and bp are identical (PrecedenceStreamSpec
+    * compares them row for row); the watermark and the (window, doc_id)
+    * fold are the inline door's too. */
   def nearDupIngestStreamLanded(spark: SparkSession, docs: DataFrame,
-      cat: IngestCatalog): DataFrame =
-    nearDupCore(docs, spark.table(cat.sigsT), spark.table(cat.bandsT))
+      cat: IngestCatalog): DataFrame = {
+    import graft.llm.Similarity
+    val idx = corpusIndex(spark, cat)
+    val probe = udf((hs: Array[Long], bkeys: Array[Long]) => idx.value.bestNear(hs, bkeys))
+    bestNearPerDoc(docs
+      .withWatermark("ts", "1 hour")
+      .select(col("doc_id"), col("ts"), Similarity.hashedShingles(col("text")).as("hs"))
+      .withColumn("sig", Similarity.minhashSignature(col("hs")))
+      .select(col("doc_id"), col("ts"),
+        probe(col("hs"), Similarity.bandKeyArray(col("sig"))).as("m"))
+      .filter(col("m").isNotNull)
+      .select(col("doc_id"), col("ts"), col("m._1").as("cor_id"), col("m._2").as("bp")))
+  }
 
   private def nearDupCore(docs: DataFrame, corpusSets: DataFrame,
       postings: DataFrame): DataFrame = {
@@ -933,7 +967,7 @@ object Streaming {
       .withWatermark("ts", "1 hour")
       .select(col("doc_id"), col("ts"), Similarity.hashedShingles(col("text")).as("hs"))
       .filter(size(col("hs")) > 0)
-    Similarity.bandKeysKeepingFor(
+    val verified = Similarity.bandKeysKeepingFor(
         probes.select(col("doc_id").as("id"), col("ts"), col("hs")),
         "id", Seq("ts", "hs"))
       .select(col("id").as("doc_id"), col("ts"), col("hs").as("hs_i"), col("bkey"))
@@ -945,11 +979,18 @@ object Streaming {
       .withColumn("bp", expr(
         "(10000 * n) div CAST(sz_i + sz_c - n AS BIGINT)"))
       .filter(col("bp") >= 9000)
+    bestNearPerDoc(verified)
+  }
+
+  /** One `(doc_id, best_match, bp)` per doc from verified `(doc_id, ts,
+    * cor_id, bp)` candidates: highest bp, ties to the lowest cor_id, one
+    * emission per doc under the watermark window. */
+  private def bestNearPerDoc(verified: DataFrame): DataFrame =
+    verified
       .groupBy(window(col("ts"), "1 hour"), col("doc_id"))
       .agg(min(struct((-col("bp")).as("nbp"), col("cor_id"))).as("best"))
       .select(col("doc_id"), col("best.cor_id").as("best_match"),
         (-col("best.nbp")).as("bp"))
-  }
 
   // ------------------------------------ streaming containment ingest gate
 
@@ -993,22 +1034,31 @@ object Streaming {
     containmentCore(docs, corpusSets, postings)
   }
 
-  /** [[containmentIngestStream]] over the LANDED catalog: trigram-gram
-    * arrays AND their exploded postings are bucketed tables, so neither a
-    * restart nor a micro-batch re-hashes (or re-explodes) the corpus —
-    * the gram-postings build was the system's largest single landing cost
-    * (255 s at sf1 pre-kernel), exactly what must never run per trigger. */
+  /** [[containmentIngestStream]] over the LANDED catalog: the trigram-gram
+    * arrays are read once per catalog generation into the broadcast
+    * [[CorpusIndex]], which inverts them into gram postings itself, and
+    * each doc probes it row-locally with the same pigeonhole prefix and
+    * verify as the inline door — no micro-batch re-hashes, re-explodes or
+    * even scans the corpus. Best matches and containment_bp are identical
+    * to the inline door's (PrecedenceStreamSpec, row for row). */
   def containmentIngestStreamLanded(spark: SparkSession, docs: DataFrame,
-      cat: IngestCatalog): DataFrame =
-    containmentCore(docs,
-      spark.table(cat.gramT)
-        .select(col("cor_id"), col("g_c").as("hs_c"), col("sz_c")),
-      spark.table(cat.gpostT))
+      cat: IngestCatalog): DataFrame = {
+    import graft.llm.Similarity
+    val idx = corpusIndex(spark, cat)
+    val probe = udf((g3: Array[Long]) => idx.value.bestContainer(g3))
+    bestContainerPerDoc(docs
+      .withWatermark("ts", "1 hour")
+      .select(col("doc_id"), col("ts"),
+        probe(Similarity.gram3Hashed(Similarity.tokens(col("text")))).as("m"))
+      .filter(col("m").isNotNull)
+      .select(col("doc_id"), col("ts"), col("m._1").as("cor_id"),
+        col("m._2").as("cont_bp")))
+  }
 
   private def containmentCore(docs: DataFrame, corpusSets: DataFrame,
       postings: DataFrame): DataFrame = {
     import graft.llm.Similarity
-    docs
+    bestContainerPerDoc(docs
       .withWatermark("ts", "1 hour")
       .select(col("doc_id"), col("ts"), Similarity.tokens(col("text")).as("t"))
       .select(col("doc_id"), col("ts"), Similarity.gram3Hashed(col("t")).as("hs_i"))
@@ -1024,13 +1074,19 @@ object Streaming {
       .withColumn("n_shared", graft.functions.ArrayKernels
         .sortedIntersectCount(col("hs_i"), col("hs_c")).cast("long"))
       .filter(lit(10) * col("n_shared") >= lit(9) * col("sz_i"))
-      .withColumn("cont_bp", expr("10000 * n_shared div sz_i"))
+      .withColumn("cont_bp", expr("10000 * n_shared div sz_i")))
+  }
+
+  /** One `(doc_id, best_match, containment_bp)` per doc from verified
+    * `(doc_id, ts, cor_id, cont_bp)` candidates: highest containment, ties
+    * to the lowest cor_id, one emission per doc under the watermark. */
+  private def bestContainerPerDoc(verified: DataFrame): DataFrame =
+    verified
       .groupBy(window(col("ts"), "1 hour"), col("doc_id"))
       .agg(min(struct((lit(10000L) - col("cont_bp")).as("neg"),
         col("cor_id"), col("cont_bp"))).as("b"))
       .select(col("doc_id"), col("b.cor_id").as("best_match"),
         col("b.cont_bp").as("containment_bp"))
-  }
 
   // ------------------------------ streaming ingest precedence census
 
@@ -1053,17 +1109,17 @@ object Streaming {
     * (canonical URL, content digest, word-shingle set, trigram set, all
     * row-local), three branches over it —
     *  - BASE: stream-static left joins against the landed canonical and
-    *    digest sets → per-doc u/e flags (stateless; one row per doc, so
-    *    every doc is classified even with zero matches);
+    *    digest sets → per-doc rank dup_url / exact_dup / ingested
+    *    (stateless; one row per doc, so every doc is classified even with
+    *    zero matches);
     *  - NEAR: [[nearDupIngestStream]]'s band-probe + exact verify,
-    *    reduced to an existence flag;
+    *    reduced to rank near_dup;
     *  - CONTAINED: [[containmentIngestStream]]'s pigeonhole prefix probe
-    *    + verify, reduced to an existence flag —
-    * unioned and folded by ONE watermark-evicted (window, doc_id) max
-    * aggregation; the precedence is a row-local CASE over the folded
-    * flags. Every join is stream-static (corpus side landed, never a
-    * build side that grows within the stream), so the job's ONLY state
-    * is the final aggregation — spec-asserted, like every door. Each doc
+    *    + verify, reduced to rank contained —
+    * unioned and folded by ONE watermark-evicted (window, doc_id) min
+    * aggregation over the ranks. Every join is stream-static (corpus side
+    * landed, never a build side that grows within the stream), so the
+    * job's ONLY state is the final aggregation — spec-asserted, like every door. Each doc
     * has one event time → one final emission in append mode.
     *
     * Runs UNCHANGED on batch frames (watermark no-ops, the window
@@ -1094,24 +1150,34 @@ object Streaming {
       gramPost)
   }
 
-  /** [[ingestPrecedenceStream]] over the LANDED catalog: all five
-    * corpus-side frames (canonical URLs, content digests, shingle sets,
-    * band postings, gram arrays) plus the exploded gram postings are
-    * bucketed catalog tables landed ONCE per corpus refresh
-    * ([[ensureIngestCatalog]] — fingerprint-locked, so a stream restart
-    * re-validates file metadata and reuses; r12 judge task 2). The
-    * inline door re-derived every one of these from the corpus frame —
-    * and stream-static sides re-execute per MICRO-BATCH, so it re-hashed
-    * the corpus per trigger, not just per restart. Statuses identical by
-    * construction (the tables hold exactly the inline frames);
+  /** [[ingestPrecedenceStream]] over the LANDED catalog: the five
+    * corpus-side tables ([[ensureIngestCatalog]], fingerprint-locked) are
+    * read once per catalog generation into the broadcast [[CorpusIndex]],
+    * and each arriving doc takes its precedence rank from ONE row-local
+    * probe of it — the four screens in order, each stopping at the first
+    * that claims the doc. A micro-batch (data or no-data trigger) runs no
+    * table scan and no broadcast exchange; the join core re-ran six
+    * broadcast exchanges per trigger. The probe columns (canonical URL,
+    * digest, shingle set, band keys, trigram set) and the verifies are
+    * the inline door's, and so is the exactly-once emission (watermark +
+    * (window, doc_id) fold), so statuses are identical;
     * PrecedenceStreamSpec proves landed-stream ≡ inline-batch doc-by-doc
-    * and that a restart re-lands nothing. */
+    * and that a restart re-lands and re-indexes nothing. */
   def ingestPrecedenceStreamLanded(spark: SparkSession, docs: DataFrame,
-      cat: IngestCatalog): DataFrame =
-    precedenceCore(docs,
-      spark.table(cat.canonT), spark.table(cat.digestT),
-      spark.table(cat.sigsT), spark.table(cat.bandsT),
-      spark.table(cat.gramT), spark.table(cat.gpostT))
+      cat: IngestCatalog): DataFrame = {
+    import graft.llm.Similarity
+    val idx = corpusIndex(spark, cat)
+    val probe = udf { (canon: String, th: String, hs: Array[Long],
+        bkeys: Array[Long], g3: Array[Long]) => idx.value.rank(canon, th, hs, bkeys, g3) }
+    val marked = if (docs.isStreaming) docs.withWatermark("ts", "1 hour") else docs
+    precedenceFold(marked
+      .select(col("doc_id"), col("ts"), canonUdf(col("url")).as("canon"),
+        md5(col("text")).as("th"), Similarity.hashedShingles(col("text")).as("hs"),
+        Similarity.gram3Hashed(Similarity.tokens(col("text"))).as("g3"))
+      .withColumn("sig", Similarity.minhashSignature(col("hs")))
+      .select(col("doc_id"), col("ts"), probe(col("canon"), col("th"), col("hs"),
+        Similarity.bandKeyArray(col("sig")), col("g3")).as("rank")))
+  }
 
   private def precedenceCore(docs: DataFrame, corCanon: DataFrame,
       corDigest: DataFrame, corpusSets: DataFrame, postings: DataFrame,
@@ -1122,13 +1188,12 @@ object Streaming {
       canonUdf(col("url")).as("canon"), md5(col("text")).as("th"),
       Similarity.hashedShingles(col("text")).as("hs"),
       Similarity.gram3Hashed(Similarity.tokens(col("text"))).as("g3"))
-    def flags(u: Int, e: Int, n: Int, c: Int) = Seq(
-      lit(u).as("u"), lit(e).as("e"), lit(n).as("n"), lit(c).as("c"))
+    def ranked(r: Int) = Seq(col("doc_id"), col("ts"), lit(r).as("rank"))
     val base = probes
       .join(corCanon.withColumn("cu", lit(1)), Seq("canon"), "left")
       .join(corDigest.withColumn("ce", lit(1)), Seq("th"), "left")
-      .select(Seq(col("doc_id"), col("ts"), coalesce(col("cu"), lit(0)).as("u"),
-        coalesce(col("ce"), lit(0)).as("e"), lit(0).as("n"), lit(0).as("c")): _*)
+      .select(col("doc_id"), col("ts"),
+        when(col("cu").isNotNull, 0).when(col("ce").isNotNull, 1).otherwise(4).as("rank"))
     val near = Similarity.bandKeysKeepingFor(
         probes.filter(size(col("hs")) > 0)
           .select(col("doc_id").as("id"), col("ts"), col("hs")), "id", Seq("ts", "hs"))
@@ -1141,7 +1206,7 @@ object Streaming {
       .withColumn("nsh", graft.functions.ArrayKernels
         .sortedIntersectCount(col("hs_i"), col("hs_c")))
       .filter(expr("(10000 * nsh) div CAST(sz_i + szc - nsh AS BIGINT)") >= 9000)
-      .select(Seq(col("doc_id"), col("ts")) ++ flags(0, 0, 1, 0): _*)
+      .select(ranked(2): _*)
     val cont = probes.withColumn("sz_i", size(col("g3")).cast("long"))
       .filter(col("sz_i") > 0)
       .select(col("doc_id"), col("ts"), col("g3"), col("sz_i"),
@@ -1153,16 +1218,22 @@ object Streaming {
       .withColumn("nsh", graft.functions.ArrayKernels
         .sortedIntersectCount(col("g3"), col("g_c")).cast("long"))
       .filter(lit(10) * col("nsh") >= lit(9) * col("sz_i"))
-      .select(Seq(col("doc_id"), col("ts")) ++ flags(0, 0, 0, 1): _*)
-    base.unionByName(near).unionByName(cont)
-      .groupBy(window(col("ts"), "1 hour"), col("doc_id"))
-      .agg(max(col("u")).as("u"), max(col("e")).as("e"),
-        max(col("n")).as("n"), max(col("c")).as("c"))
-      .select(col("doc_id"),
-        when(col("u") === 1, "dup_url").when(col("e") === 1, "exact_dup")
-          .when(col("n") === 1, "near_dup").when(col("c") === 1, "contained")
-          .otherwise("ingested").as("status"))
+      .select(ranked(3): _*)
+    precedenceFold(base.unionByName(near).unionByName(cont))
   }
+
+  /** One `(doc_id, status)` per doc from `(doc_id, ts, rank)` rows, rank =
+    * the first screen that claims the doc (0 dup_url, 1 exact_dup,
+    * 2 near_dup, 3 contained, 4 ingested): the minimum over a doc's rows
+    * under the watermark window, so each doc is emitted once. */
+  private def precedenceFold(ranked: DataFrame): DataFrame =
+    ranked
+      .groupBy(window(col("ts"), "1 hour"), col("doc_id"))
+      .agg(min(col("rank")).as("rank"))
+      .select(col("doc_id"),
+        when(col("rank") === 0, "dup_url").when(col("rank") === 1, "exact_dup")
+          .when(col("rank") === 2, "near_dup").when(col("rank") === 3, "contained")
+          .otherwise("ingested").as("status"))
 
   // --------------------------------------- streaming daily theta sketches
 

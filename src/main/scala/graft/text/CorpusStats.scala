@@ -2850,7 +2850,7 @@ object CorpusStats {
       // first window's lag is NULL → sentinel no real lang equals → new
       // segment, so seg ids start at 1 (oracle: IS DISTINCT FROM lag)
       .withColumn("new_seg",
-        when(coalesce(lag(col("pred_lang"), 1).over(byDoc), lit(" "))
+        when(coalesce(lag(col("pred_lang"), 1).over(byDoc), lit("\u0000"))
           =!= col("pred_lang"), 1L).otherwise(0L))
       .withColumn("seg_id", sum(col("new_seg")).over(byDoc))
   }

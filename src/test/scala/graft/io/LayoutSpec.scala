@@ -274,7 +274,7 @@ class LayoutSpec extends SparkSpec {
           r.getLong(5), r.getLong(6), r.getLong(7)))
       .toMap
     assert(got.keySet == rows.map(_._3).toSet)
-    val U = ""
+    val U = "\u001f"
     def xor(fps: Seq[Long]): Long = fps.foldLeft(0L)(_ ^ _)
     rows.groupBy(_._3).foreach { case (src, rs) =>
       val (nA, nR, nC, nU, fpA, fpR, fpC) = got(src)

@@ -18,6 +18,20 @@ class SimilaritySpec extends SparkSpec {
     assert(sigs(0) != sigs(2), "distinct texts should differ")
   }
 
+  test("bandKeyArray element b ≡ the bkey bandKeysFor emits for band b") {
+    import spark.implicits._
+    val hs = graft.Tables.documents(spark, sfDir).limit(200)
+      .select(col("doc_id").as("id"), Similarity.hashedShingles(col("text")).as("hs"))
+      .filter(size(col("hs")) > 0)
+    val exploded = Similarity.bandKeysFor(hs, "id")
+      .select(col("id"), col("bkey")).as[(Long, Long)].collect().toSet
+    val arrays = hs.select(col("id"),
+        Similarity.bandKeyArray(Similarity.minhashSignature(col("hs"))).as("bk"))
+      .as[(Long, Seq[Long])].collect()
+    assert(arrays.nonEmpty && arrays.forall(_._2.length == Similarity.Bands))
+    assert(arrays.flatMap { case (id, bk) => bk.map(id -> _) }.toSet == exploded)
+  }
+
   test("minhash estimates Jaccard within tolerance") {
     import spark.implicits._
     // two texts sharing 6 of 8 distinct tokens: J = 6/10... compute exactly
