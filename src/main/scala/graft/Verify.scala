@@ -1,34 +1,23 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.collection.immutable.ListMap
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS); read as LONG nanos and let
-      // Tables.events truncate to micros (matches DuckDB's read).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.envCpus(4))
     new java.io.File(outDir).mkdirs()
-    // Dev-only subset filter (comma-separated names); the driver sets no
-    // env, so its runs always dump the full surface.
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     // Record Dist range-partition boundary digests per query (dumped as
     // dist_digest.json below) — a hash mismatch on a Dist-based query is
     // then diagnosable against the exact boundaries this run sampled.
     sys.props("graft.dist.digest") = "true"
     val digestLines = scala.collection.mutable.LinkedHashMap[String, Seq[String]]()
-    val rowDigests = scala.collection.mutable.LinkedHashMap[String, String]()
+    val rowDigests = scala.collection.mutable.LinkedHashMap[String, ListMap[String, Any]]()
+    // dev-only subset filter; unset, every registered query is dumped
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => Sessions.selected(name) }
       .foreach { case (name, fn) =>
       try {
         fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -41,28 +30,11 @@ object Verify {
       val dg = Dist.drainDigests()
       if (dg.nonEmpty) digestLines(name) = dg
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    val digestJson = digestLines
-      .map { case (k, vs) => s"${q(k)}: ${vs.map(q).mkString("[", ",", "]")}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/dist_digest.json"), digestJson)
-    val rowJson = rowDigests
-      .map { case (k, v) => s"${q(k)}: $v" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/row_digest.json"), rowJson)
+    def dump(file: String, v: Any): Unit =
+      Files.writeString(Paths.get(s"$outDir/$file"), Json.write(v))
+    dump("oracle_sql.json", SparkEntry.oracleSql)
+    dump("dist_digest.json", digestLines)
+    dump("row_digest.json", rowDigests)
     spark.stop()
   }
 
@@ -77,31 +49,21 @@ object Verify {
     * fully visible in the artifact and a red row becomes a one-look
     * diagnosis. Row cap 2M: every registered output is far below it; the
     * guard only exists so a future unbounded query cannot OOM the
-    * driver JVM. Returns a JSON object literal (keys pre-escaped). */
-  private def rowDigest(spark: SparkSession, path: String): String = {
+    * driver JVM. */
+  private def rowDigest(spark: SparkSession, path: String): ListMap[String, Any] = {
     import org.apache.spark.sql.functions.{coalesce, col, concat_ws, lit}
     val df = spark.read.parquet(path)
     val cols = df.columns.sorted
     val n = df.count()
-    if (n > 2000000L) return s"""{"rows": $n, "sha256": "TOO_LARGE"}"""
+    if (n > 2000000L) return ListMap("rows" -> n, "sha256" -> "TOO_LARGE")
     val rendered = df.select(concat_ws("\t",
         cols.toSeq.map(c => coalesce(col(c).cast("string"), lit("\\N"))): _*).as("r"))
       .collect().map(_.getString(0)).sorted
     val md = java.security.MessageDigest.getInstance("SHA-256")
     val sha = md.digest(rendered.mkString("\n").getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
-    def esc(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val sample =
-      if (n <= 100) s""", "cols": ${cols.map(esc).mkString("[", ",", "]")}, "rows_sorted": ${rendered.map(esc).mkString("[", ",", "]")}"""
-      else ""
-    s"""{"rows": $n, "sha256": "$sha"$sample}"""
+    ListMap("rows" -> n, "sha256" -> sha) ++
+      (if (n <= 100) ListMap("cols" -> cols.toSeq, "rows_sorted" -> rendered.toSeq)
+       else ListMap.empty)
   }
 }

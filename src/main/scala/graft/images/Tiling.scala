@@ -188,13 +188,4 @@ object Tiling {
       out.filter(col("data").isNotNull).count()
     } finally { out.unpersist(); () }
   }
-
-  /** Caption attach by filename stem (the reference's only join, §1.2):
-    * tiny caption table broadcast against the tile stream. */
-  def attachCaptions(tilesDf: DataFrame, captions: DataFrame): DataFrame = {
-    val keyed = captions.select(col("stem").as("cap_stem"), col("caption"))
-    tilesDf.withColumn("stem", stem(col("file_name")))
-      .join(broadcast(keyed), col("stem") === col("cap_stem"), "left")
-      .drop("cap_stem")
-  }
 }

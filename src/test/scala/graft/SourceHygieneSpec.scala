@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * pasted into a literal makes grep treat the whole file as binary and
   * silently skip it. Write `\u0000`-style escapes instead. Binary
   * fixtures under `src/{main,test}/resources` are data, not source, and
-  * are not scanned. */
+  * are not scanned. Sessions are built in one place only
+  * ([[Sessions.local]]), so entry points cannot drift apart in config. */
 class SourceHygieneSpec extends AnyFunSuite {
 
   private def isControl(c: Char) = c < 0x20 && c != '\t' && c != '\n' && c != '\r'
@@ -32,5 +33,19 @@ class SourceHygieneSpec extends AnyFunSuite {
       }
     }
     assert(offenders.isEmpty, offenders.mkString("raw control bytes at:\n", "\n", ""))
+  }
+
+  test("src/main builds a SparkSession only in Sessions.scala") {
+    val main = Paths.get("src/main")
+    val builds = Files.walk(main).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toSeq
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (l, i) if l.contains("SparkSession.builder()") &&
+            !Seq("//", "*", "/*").exists(l.trim.startsWith) => s"$p:${i + 1}"
+        }
+      }
+    assert(builds.size == 1 && builds.head.startsWith(s"${main.resolve("scala/graft/Sessions.scala")}:"),
+      builds.mkString("SparkSession.builder() outside Sessions.scala:\n", "\n", ""))
   }
 }
